@@ -6,69 +6,88 @@ symmetric/transitive and propagates it
 Spark scale that closure is connected components over the equivalence
 edge set; we implement the **alternating large-star / small-star**
 algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14) — O(log n) rounds regardless of component diameter,
-each round two shuffles, which is what survives a 100 TB edge set
+Beyond", SoCC'14) — O(log n) rounds regardless of component diameter
 (naive label propagation is O(diameter) rounds and dies on chains).
 
 Representative choice: lexicographically smallest member (strings order
 identically in Python and the JVM for our ASCII IRIs — the oracle uses
-the same rule). IDs stay strings in v1 for correctness/debuggability;
-a 64-bit dictionary encoding (cf. TDB NodeId,
-``jena-tdb/.../store/NodeId.java:115-152``) is the documented perf
-follow-up for join-heavy stages.
+the same rule). The rounds iterate on xxhash64 node ids (cf. TDB
+NodeId, ``jena-tdb/.../store/NodeId.java:115-152``); the min-string
+representative is elected once, at decode.
 
-Skew note (north rule): hot entities produce high-degree stars. The
-groupBy in each round is a partial-aggregable min — Spark's map-side
-combine absorbs the skew before shuffle; the final rewrite join
-broadcasts the mapping when small and otherwise relies on AQE skew-join
-splitting (enabled in session.py).
+Cost per round: at the sizes served here a round costs Spark job and
+stage overhead, not data volume, so each round is built to run few
+jobs. Each star step takes its neighbourhood min with one window
+exchange (``min(dst) OVER (PARTITION BY src)``) instead of an
+aggregate plus a join back; small-star adds one dedup exchange; the
+round's eager ``localCheckpoint`` also reads the convergence signature
+through ``DataFrame.observe``, so there is no separate signature job.
+That is 4 jobs a round, against 10 for the aggregate+join form with
+its separate signature job (measured on a 60-node chain). The
+returned mapping is materialized once, so the two broadcast joins of
+:func:`canonicalize_triples` do not each replay the decode.
+
+Skew trade-off (north rule: hot entities produce high-degree stars): a
+window exchange sends all the edges of a star centre to one task, as
+one sorted run that can spill to disk. The map-side partial
+aggregation of a ``groupBy`` min, and AQE's skew-join splitting of the
+join back, no longer apply to the star steps. The benchmark's
+``skewed`` workload (a hot component of a 240-node star plus a chain)
+checks that this costs nothing at the sizes served; at a hub degree
+where one sorted run per hub spills, the aggregate+join form is the
+one to return to. The final rewrite join broadcasts the mapping when
+small and otherwise relies on AQE skew-join splitting (enabled in
+session.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from jena_spark import terms as TM
+from jena_spark.pipeline.encode import term_id_col
 
 
 def _large_star(e: DataFrame) -> DataFrame:
-    """Connect all strictly-larger neighbors to the neighborhood min."""
+    """Connect all strictly-larger neighbors to the neighborhood min.
+
+    The neighborhood min is a window over the undirected edge frame, so
+    the step is one exchange (by ``src``) instead of an aggregate plus a
+    join back. No dedup: the output is at most twice the input, and the
+    following small-star step removes duplicates."""
     und = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    mins = (
-        und.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select("src", F.least("mn", "src").alias("m"))
-    )
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
-        und.join(mins, "src")
+        und.select("src", "dst", m.alias("m"))
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
 def _small_star(e: DataFrame) -> DataFrame:
-    """Connect all smaller-or-equal neighbors (and self) to the min."""
+    """Connect all smaller-or-equal neighbors (and self) to the min:
+    one window exchange for the min, one for the final dedup."""
     d = e.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     )
-    mins = d.groupBy("src").agg(F.min("dst").alias("m"))
-    out = (
-        d.join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .union(mins.select(F.col("src"), F.col("m").alias("dst")))
-    )
+    m = F.min("dst").over(Window.partitionBy("src"))
+    out = d.select(F.explode(F.array("dst", "src")).alias("src"), m.alias("dst"))
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _signature(e: DataFrame) -> tuple[int, int]:
-    row = e.select(
+def _signature(src: Column, dst: Column) -> list[Column]:
+    """Convergence signature of an edge set as ``observe`` metrics:
+    (edge count, xor of the edge hashes)."""
+    return [
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
+        F.coalesce(F.bit_xor(F.xxhash64(src, dst)), F.lit(0)).alias("h"),
+    ]
+
+
+def _node_id(c: str) -> Column:
+    null_s = F.lit(None).cast("string")
+    return term_id_col(F.lit("n"), F.col(c), null_s, null_s)
 
 
 def _unionfind(pairs: list[tuple[str, str]]) -> dict[str, str]:
@@ -104,70 +123,84 @@ def connected_components(
     large-star/small-star iteration runs fully distributed. Both paths
     produce the identical mapping (min-member representative).
 
-    Only nodes that appear in an edge are returned (isolated nodes map
-    to themselves implicitly). Each distributed round is
-    localCheckpoint'ed to cut lineage — at cluster scale this would be
-    ``df.checkpoint()`` to a reliable store, which is also the
-    per-round resume point.
+    Every node that appears in an edge is returned, representatives
+    self-mapped (rep -> rep); isolated nodes map to themselves
+    implicitly. The rewrite in :func:`canonicalize_triples` relies on
+    "mapping hit" meaning "this IRI belongs to some equivalence
+    component".
+
+    Distributed path, in Spark jobs:
+
+    * the deduplicated input is ``localCheckpoint``'ed once, and that
+      job also observes the edge count (the driver/distributed switch)
+      and the encoded edge set's signature;
+    * each round is large-star then small-star on xxhash64 node ids,
+      each star step one window exchange, plus the small-star dedup —
+      4 jobs a round, one of them the round's eager
+      ``localCheckpoint`` (cuts lineage; on a cluster this would be
+      ``df.checkpoint()`` to a reliable store, the per-round resume
+      point). Convergence is read from the (count, ``bit_xor`` of edge
+      hashes) signature observed in that same checkpoint job, under a
+      fixed observation name ``cc-round-{i}``; an unchanged signature
+      ends the loop;
+    * the decode — node dictionary, left join to the roots, window min
+      of the member strings by root — runs once and the mapping is
+      returned ``localCheckpoint``'ed, so callers that join it more
+      than once (``canonicalize_triples`` broadcasts it as both the
+      subject and the object map) do not replay it.
+
+    Raises ``RuntimeError`` if the signature still changes after
+    ``max_iter`` rounds: a partial iteration is not a partition into
+    components, and decoding it would silently split components.
     """
     spark = edges.sparkSession
+    obs = Observation("cc-edges")
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
+        .observe(obs, *_signature(_node_id("src"), _node_id("dst")))
         .localCheckpoint(eager=True)
     )
-    n_edges = e.count()
-    if n_edges == 0:
+    sig = obs.get
+    if sig["n"] == 0:
         return spark.createDataFrame([], "node string, component string")
-    if n_edges <= driver_threshold:
+    if sig["n"] <= driver_threshold:
         mapping = _unionfind([(r["src"], r["dst"]) for r in e.collect()])
         return spark.createDataFrame(
             sorted(mapping.items()), "node string, component string"
         )
-    # NOTE: the distributed path below also self-maps representatives
-    # (rep -> rep) before returning, matching the driver path — the
-    # rewrite in canonicalize_triples relies on "mapping hit" meaning
-    # "this IRI belongs to some equivalence component".
-    #
-    # Dictionary-encoded iteration (TDB NodeId posture): the
-    # large-star/small-star rounds shuffle 16-byte (src, dst) long
-    # pairs instead of IRI strings — component MEMBERSHIP is invariant
-    # under any total order of node ids, so iterating on xxhash64 ids
-    # is sound; the min-STRING representative (the semantics the driver
-    # path and the oracle use) is re-elected per component at decode
-    # time with one aggregation.
-    from jena_spark.pipeline.encode import term_id_col
-
-    null_s = F.lit(None).cast("string")
-    nodes = (
-        e.select(F.col("src").alias("val"))
-        .union(e.select(F.col("dst").alias("val")))
-        .distinct()
-        .select(term_id_col(F.lit("n"), F.col("val"), null_s, null_s).alias("node_id"),
-                "val")
-        .localCheckpoint(eager=True)
-    )
-    enc = e.select(
-        term_id_col(F.lit("n"), F.col("src"), null_s, null_s).alias("src"),
-        term_id_col(F.lit("n"), F.col("dst"), null_s, null_s).alias("dst"),
-    ).localCheckpoint(eager=True)
-    sig = _signature(enc)
-    for _ in range(max_iter):
-        enc = _small_star(_large_star(enc)).localCheckpoint(eager=True)
-        new_sig = _signature(enc)
+    # Dictionary-encoded iteration (TDB NodeId posture): the rounds
+    # shuffle 16-byte (src, dst) long pairs instead of IRI strings —
+    # component MEMBERSHIP is invariant under any total order of node
+    # ids, so iterating on xxhash64 ids is sound; the min-STRING
+    # representative (the semantics the driver path and the oracle use)
+    # is re-elected per component at decode time.
+    enc = e.select(_node_id("src").alias("src"), _node_id("dst").alias("dst"))
+    for i in range(max_iter):
+        obs = Observation(f"cc-round-{i}")
+        enc = (
+            _small_star(_large_star(enc))
+            .observe(obs, *_signature(F.col("src"), F.col("dst")))
+            .localCheckpoint(eager=True)
+        )
+        new_sig = obs.get
         if new_sig == sig:
             break
         sig = new_sig
-    # fixpoint: every edge is (node_id -> root_id); add root self-maps
-    memb = (
-        enc.select(F.col("src").alias("node_id"), F.col("dst").alias("root_id"))
-        .union(enc.select(F.col("dst").alias("node_id"), F.col("dst").alias("root_id")))
-        .distinct()
-    )
-    named = memb.join(nodes, "node_id").select("root_id", F.col("val").alias("node"))
-    reps = named.groupBy("root_id").agg(F.min("node").alias("component"))
-    return named.join(reps, "root_id").select("node", "component").distinct()
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} "
+            "rounds; raise max_iter")
+    # fixpoint: a star forest, one edge (node_id -> root_id) per non-root
+    vals = e.select(F.col("src").alias("val")).union(e.select(F.col("dst").alias("val")))
+    nodes = vals.distinct().select(_node_id("val").alias("node_id"), "val")
+    roots = enc.select(F.col("src").alias("node_id"), F.col("dst").alias("root_id"))
+    named = nodes.join(roots, "node_id", "left").select(
+        F.coalesce("root_id", "node_id").alias("root_id"), F.col("val").alias("node"))
+    return named.select(
+        "node", F.min("node").over(Window.partitionBy("root_id")).alias("component")
+    ).localCheckpoint(eager=True)
 
 
 def sameas_edges(triples: DataFrame) -> DataFrame:
@@ -312,8 +345,6 @@ def _dedup_canon_mentions(mentions: DataFrame,
     encoded path's dedup key and this one are the same value.
     Output is row-identical to the direct string distinct (the dim is
     a bijection), preserving the fused==generic invariant."""
-    from jena_spark.pipeline.encode import term_id_col
-
     rep_ids = rep_dim.select("rep").distinct().withColumn(
         "rep_id", term_id_col(F.lit("iri"), F.col("rep"),
                               F.lit(None).cast("string"),

@@ -14,7 +14,8 @@ The fallback is no longer a bare ``mode("append")`` parquet dir:
 metadata level so the API surface has real behavior to test against —
 
 * **immutable data files + manifest**: each commit writes its data
-  under ``data/<snapshot_id>/`` and appends a manifest entry listing
+  under a fresh ``data/s<n>/`` (``n`` never reused, even after
+  ``expire_snapshots``) and appends a manifest entry listing
   the snapshot's FULL file set (an append lists the parent's files
   plus its own — old data is never rewritten, exactly Iceberg's
   manifest-list reuse);
@@ -31,6 +32,10 @@ metadata level so the API surface has real behavior to test against —
   snapshot (upsert by key), the row-level-operation analog;
 * **expire_snapshots**: drops unreferenced data dirs, keeping the
   current chain — the maintenance op.
+
+A commit onto a plain parquet dir (files but no manifest) is refused:
+the new log would not list the existing files, and their rows would
+vanish from reads.
 
 Snapshot ids are md5 content hashes of (parent, operation, files) —
 the repo's determinism rule (no uuid/now in pipeline paths); travel
@@ -155,28 +160,48 @@ class IcebergLiteTable:
         self._atomic_write(self.CURRENT, sid)
         return sid
 
-    def _write_data(self, df: DataFrame, tag: str) -> str:
-        rel = f"data/{tag}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, rel))
+    def _write_data(self, df: DataFrame) -> str:
+        """Write ``df`` under ``data/s<n>``, ``n`` one past the highest
+        tag on disk. The newest commit's dir is never expired, so no
+        past or live dir has that tag; a tag counted from the snapshot
+        log's length would name a live dir once ``expire_snapshots``
+        shortens the log."""
+        data = os.path.join(self.path, "data")
+        names = os.listdir(data) if os.path.isdir(data) else []
+        used = [int(n[1:]) for n in names if n[:1] == "s" and n[1:].isdigit()]
+        rel = f"data/s{max(used, default=-1) + 1}"
+        df.write.mode("errorifexists").parquet(os.path.join(self.path, rel))
         return rel
+
+    def _refuse_plain_parquet(self) -> None:
+        """A commit onto a plain parquet dir (data files, no manifest)
+        would start a snapshot log without them and hide their rows
+        from every read: refuse it."""
+        if self._manifest():
+            return
+        plain = [n for n in os.listdir(self.path)
+                 if not n.startswith((".", "_")) and n != "data"]
+        if plain:
+            raise ValueError(
+                f"{self.path} is a plain parquet dir, not a snapshot table; "
+                "copy it into a new table (overwrite with its read_table "
+                "contents) before committing to it")
 
     # -- operations -------------------------------------------------------
 
     def overwrite(self, df: DataFrame) -> str:
         """Replace the table contents (``writeTo(...).createOrReplace``
         / ``INSERT OVERWRITE``). Returns the new snapshot id."""
-        n = len(self._manifest())
-        rel = self._write_data(df, f"s{n}")
-        return self._commit("overwrite", [rel])
+        self._refuse_plain_parquet()
+        return self._commit("overwrite", [self._write_data(df)])
 
     def append(self, df: DataFrame) -> str:
         """ACID append: new files only; the snapshot's file set is the
         parent's plus this commit's (no rewrite of old data)."""
+        self._refuse_plain_parquet()
         parent = self.current_snapshot()
         base = self._entry(parent)["files"] if parent else []
-        n = len(self._manifest())
-        rel = self._write_data(df, f"s{n}")
-        return self._commit("append", base + [rel])
+        return self._commit("append", base + [self._write_data(df)])
 
     def merge(self, updates: DataFrame, key: str | list[str]) -> str:
         """MERGE INTO by key (upsert: matched rows replaced, unmatched
@@ -184,13 +209,12 @@ class IcebergLiteTable:
         operation Iceberg runs with delete files; here the merged
         result is rewritten (copy-on-write posture)."""
         keys = [key] if isinstance(key, str) else list(key)
+        self._refuse_plain_parquet()
         cur = self.read()
         kept = cur.join(updates.select(*keys).distinct(), keys,
                         "left_anti") if cur is not None else None
         merged = updates if kept is None else kept.unionByName(updates)
-        n = len(self._manifest())
-        rel = self._write_data(merged, f"s{n}")
-        return self._commit("merge", [rel])
+        return self._commit("merge", [self._write_data(merged)])
 
     def read(self, snapshot_id: str | None = None) -> DataFrame | None:
         """Current table, or ``VERSION AS OF snapshot_id`` time

@@ -3,16 +3,22 @@
 from __future__ import annotations
 
 import random
+import threading
+
+import pytest
 
 from jena_spark.oracle.ref_pipeline import _components
 from jena_spark.pipeline.canonicalize import connected_components
 
 
+def _mapping(spark, edges, **kw) -> set[tuple[str, str]]:
+    e = spark.createDataFrame(edges, "src string, dst string")
+    return {(r["node"], r["component"])
+            for r in connected_components(e, **kw).collect()}
+
+
 def _run(spark, pairs):
-    e = spark.createDataFrame(pairs, "src string, dst string")
-    got = {
-        (r["node"], r["component"]) for r in connected_components(e).collect()
-    }
+    got = _mapping(spark, pairs)
     want_map = _components(pairs)
     # mapping contract: every node in some component appears, including
     # representatives self-mapped (rep -> rep)
@@ -55,25 +61,56 @@ def test_cc_two_components(spark):
 
 def test_connected_components_distributed_equals_driver(spark):
     """Force the distributed (encoded large-star/small-star) path with
-    driver_threshold=0 and assert it matches the driver union-find on a
-    graph with chains, stars, and multiple components — including the
-    min-STRING representative election."""
-    edges = [
+    driver_threshold=0 and assert it matches the driver union-find and
+    the reference oracle, including the min-STRING representative
+    election and representatives mapped to themselves — on chains,
+    stars, multiple components, the benchmark's hot component (a star
+    of 240 leaves plus a chain), reverse-duplicate edges and a graph of
+    self-loops only."""
+    mixed = [
         ("b", "a"), ("c", "b"), ("d", "c"),        # chain -> comp 'a'
         ("x2", "x1"), ("x3", "x1"), ("x4", "x1"),  # star  -> comp 'x1'
         ("m", "z"),                                 # pair  -> comp 'm'
         ("q", "q"),                                 # self-loop dropped
     ]
-    e = spark.createDataFrame(edges, "src string, dst string")
-    driver = {
-        (r["node"], r["component"])
-        for r in connected_components(e).collect()
+    hub = [(f"h{i:03d}", "h999") for i in range(240)]
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
+    cases = {
+        "mixed": mixed,
+        "hot_star": hub,
+        "chain_60": chain,
+        "hot_star_plus_chain": hub + chain + [("n059", "h120")],
+        "reverse_duplicates": [("b", "a"), ("a", "b"), ("b", "a"),
+                               ("c", "b"), ("b", "c"), ("e", "d"), ("d", "e")],
     }
-    dist = {
-        (r["node"], r["component"])
-        for r in connected_components(e, driver_threshold=0).collect()
-    }
-    assert dist == driver
-    comp_of = dict(dist)
+    dist = {}
+    for name, edges in cases.items():
+        driver = _mapping(spark, edges)
+        dist[name] = _mapping(spark, edges, driver_threshold=0)
+        want = set(_components([(a, b) for a, b in edges if a != b]).items())
+        assert dist[name] == driver == want, name
+    comp_of = dict(dist["mixed"])
     assert comp_of["d"] == "a" and comp_of["x4"] == "x1" and comp_of["z"] == "m"
     assert comp_of["a"] == "a"  # rep self-map present
+    assert "q" not in comp_of
+
+    # self-loops only: empty mapping, and the observed edge count must
+    # not leave the call waiting on an Observation
+    result: list = []
+    t = threading.Thread(
+        target=lambda: result.append(_mapping(
+            spark, [("q", "q"), ("r", "r")], driver_threshold=0)),
+        daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "connected_components blocked on a self-loop-only graph"
+    assert result == [set()]
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """One round cannot collapse a 60-node chain: the distributed path
+    must refuse to decode the partial iteration."""
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
+    e = spark.createDataFrame(chain, "src string, dst string")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(e, max_iter=1, driver_threshold=0)

@@ -101,3 +101,32 @@ def test_deterministic_snapshot_ids(spark, tmp_path):
         ids.append((t.overwrite(_df(spark, [(1, "a")])),
                     t.append(_df(spark, [(2, "b")]))))
     assert ids[0] == ids[1]
+
+
+def test_append_after_expire_keeps_live_dirs(spark, tmp_path):
+    """A commit after expire_snapshots must not reuse the tag of a live
+    data dir (the tag once followed the shortened log's length)."""
+    p = str(tmp_path / "tbl")
+    t = IcebergLiteTable(spark, p)
+    for b in range(3):
+        t.append(_df(spark, [(b * 10 + i, "x") for i in range(10)]))
+    t.expire_snapshots(keep=1)
+    t.append(_df(spark, [(100 + i, "y") for i in range(5)]))
+    keys = [r["k"] for r in read_table(spark, p).collect()]
+    assert len(keys) == 35 and len(set(keys)) == 35
+
+
+def test_commit_onto_plain_parquet_refused(spark, tmp_path):
+    """append_table onto a plain parquet dir must not hide its rows
+    (7 existing + 3 appended once read back as 3): it is refused, and
+    the existing rows still read."""
+    p = str(tmp_path / "plain")
+    _df(spark, [(i, "old") for i in range(7)]).write.parquet(p)
+    with pytest.raises(ValueError, match="plain parquet"):
+        append_table(_df(spark, [(i, "new") for i in range(7, 10)]), p)
+    t = IcebergLiteTable(spark, p)
+    for commit in (lambda: t.overwrite(_df(spark, [(0, "x")])),
+                   lambda: t.merge(_df(spark, [(0, "x")]), key="k")):
+        with pytest.raises(ValueError, match="plain parquet"):
+            commit()
+    assert sorted(r["k"] for r in read_table(spark, p).collect()) == list(range(7))
