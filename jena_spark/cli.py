@@ -425,14 +425,12 @@ def _cmd_tdbcompact(args) -> int:
     import os
     import shutil
 
-    from jena_spark.streaming.ingest import CURRENT
+    from jena_spark.streaming.ingest import CURRENT, current_version
 
     loc = args.location
-    ptr = os.path.join(loc, CURRENT)
-    if not os.path.exists(ptr):
+    live = current_version(loc)
+    if live is None:
         raise SystemExit(f"tdbcompact: no {CURRENT} pointer in {loc}")
-    with open(ptr) as fh:
-        live = fh.read().strip()
     removed = []
     for name in sorted(os.listdir(loc)):
         full = os.path.join(loc, name)

@@ -248,8 +248,9 @@ def present_rep_dim(mentions: DataFrame, gazetteer: dict | None = None) -> DataF
 def present_rep_rows(present: list[str],
                      gazetteer: dict | None = None) -> list[tuple[str, str]]:
     """Pure-Python core of :func:`present_rep_dim`: (surface, rep)
-    pairs for a given present-surface list — shared by the batch path
-    and :func:`construct_incremental`'s re-election delta."""
+    pairs for a given present-surface list — the election both
+    construction functions (:func:`construct_incremental` and its
+    encoded twin) fold with."""
     from jena_spark.gazetteer import DEFAULT_GAZETTEER, validate_gazetteer
 
     s2c = validate_gazetteer(gazetteer or DEFAULT_GAZETTEER)
@@ -340,11 +341,16 @@ def _dedup_canon_mentions(mentions: DataFrame,
 
     The id is :func:`jena_spark.pipeline.encode.term_id_col` over the
     iri term — the SAME function that assigns ``o_id`` in the encoded
-    store, so the collision policy is the node-dictionary policy
-    (xxhash64 content ids, ``encode.assert_injective``) and the
-    encoded path's dedup key and this one are the same value.
-    Output is row-identical to the direct string distinct (the dim is
-    a bijection), preserving the fused==generic invariant."""
+    store, so the encoded path's dedup key and this one are the same
+    value. No injectivity check runs on ``rep_ids`` during a build: two
+    reps sharing an xxhash64 id would silently cross their mention
+    edges here (the join back fans each id out to both reps). The check
+    that catches such a collision is ``encode.assert_injective`` over a
+    node dictionary deduplicated by term content
+    (``encode.node_dictionary``), run outside the build. Without a
+    collision the dim is a bijection and the output is row-identical
+    to the direct string distinct, preserving the fused==generic
+    invariant."""
     rep_ids = rep_dim.select("rep").distinct().withColumn(
         "rep_id", term_id_col(F.lit("iri"), F.col("rep"),
                               F.lit(None).cast("string"),
@@ -364,14 +370,40 @@ def construct_canonical(
     transcripts: DataFrame, gazetteer: dict | None = None,
     mentions: DataFrame | None = None,
 ) -> DataFrame:
-    """Fused single-pass canonical construction (deployment hot path).
+    """One-shot canonical construction: the fold of ``transcripts``
+    onto no store (see :func:`construct_incremental`)."""
+    return construct_incremental(None, transcripts, gazetteer, mentions)
 
-    Row-identical to ``canonicalize_triples(raw_triples(transcripts))``
-    (asserted at two scale factors by ``tests/test_materialize.py``) but
-    shaped for throughput: every shuffle moves *pre-stringification*
-    narrow rows, and every output string is materialized exactly once,
-    in the final narrow emit. It rests on three theorems of the
-    emission + rewrite rules:
+
+def construct_incremental(
+    existing: DataFrame | None, new_transcripts: DataFrame,
+    gazetteer: dict | None = None, mentions: DataFrame | None = None,
+) -> DataFrame:
+    """Fold a NEW batch of conversations into a canonical triple table
+    without reconstructing it — the operation a deployed KG pipeline
+    runs per arriving partition of a 10^12-turn corpus. With
+    ``existing=None`` the fold is the one-shot build
+    (:func:`construct_canonical`), as ``Graph.add`` onto an empty graph
+    is building a Model: there is one construction path, so the invariant
+
+        ``construct_incremental(construct_canonical(A), B)``
+        is row-identical to ``construct_canonical(A ∪ B)``
+
+    holds by construction (asserted by ``tests/test_incremental.py`` on
+    fresh seeds, including a forced re-election).
+
+    Contract: ``existing`` is None or this function's own output, and
+    ``new_transcripts`` contains only conv_ids not present in it
+    (append-only batches; amending a conversation is a DELETE +
+    re-insert through the update ops).
+
+    The batch's emission is row-identical to
+    ``canonicalize_triples(raw_triples(new_transcripts))`` (asserted at
+    two scale factors by ``tests/test_materialize.py``) but shaped for
+    throughput: every shuffle moves *pre-stringification* narrow rows,
+    and every output string is materialized exactly once, in the final
+    narrow emit. It rests on three theorems of the emission + rewrite
+    rules:
 
     1. *Structure triples are never touched*: their IRIs live in
        ``NS_CONV``; equivalence components contain only ``NS_ENTITY``
@@ -388,79 +420,19 @@ def construct_canonical(
        injective in (conv_id, turn_idx). So the post-rewrite dedup of
        ~250 B string triples collapses to a dedup of 3 narrow columns
        BEFORE any IRI/bnode string is built. (The surface -> rep map
-       comes from :func:`present_rep_dim` — union-find over the sameAs
-       edges the PRESENT surfaces actually emit, which is exactly the
-       generic data-derived closure.)
+       is :func:`present_rep_rows` — union-find over the sameAs edges
+       the PRESENT surfaces actually emit, which is exactly the generic
+       data-derived closure.)
 
-    Canonical labels are (rep(surface), rdfs:label, surface), keyed by
-    the distinct-surface dimension (tiny).
+    Canonical labels are (rep(surface), rdfs:label, surface), one per
+    present surface, built from the in-memory election rows (tiny).
 
     At 10^12 turns this removes: one full-width persist of the raw
     table, two full rewrite joins, and a wide post-rewrite dedup
     shuffle — leaving one narrow mention shuffle + one narrow dedup as
     the only wide operations in the whole construction.
-    """
-    from jena_spark.pipeline.extract import (
-        _null_s,
-        extract_mentions,
-        turn_structure_triples,
-    )
 
-    gaz = gazetteer
-
-    structure = turn_structure_triples(transcripts)
-
-    if mentions is None:
-        # Caller may pass an already-persisted mention frame (e.g. the
-        # query registry shares one between this fused path and
-        # raw_triples so the extraction UDF runs once per corpus).
-        mentions = extract_mentions(transcripts, gaz).persist()
-    rep_dim = present_rep_dim(mentions, gaz)
-    canon_mentions = _dedup_canon_mentions(mentions, rep_dim)
-    turn_bnode = TM.skolem_col(
-        F.col("conv_id"), F.concat(F.lit("turn-"), F.col("turn_idx").cast("string"))
-    )
-    edges = canon_mentions.select(
-        F.lit("bnode").alias("s_kind"), turn_bnode.alias("s_val"),
-        F.lit(TM.P_MENTIONS).alias("p_val"),
-        F.lit("iri").alias("o_kind"), F.col("rep").alias("o_val"),
-        _null_s().alias("o_datatype"), _null_s().alias("o_lang"),
-        _null_s().alias("graph"), F.col("conv_id"),
-    )
-    labels = (
-        mentions.select("surface").distinct()
-        .join(F.broadcast(rep_dim), "surface")
-        .select(
-            F.lit("iri").alias("s_kind"), F.col("rep").alias("s_val"),
-            F.lit(TM.RDFS_LABEL).alias("p_val"),
-            F.lit("literal").alias("o_kind"), F.col("surface").alias("o_val"),
-            _null_s().alias("o_datatype"), _null_s().alias("o_lang"),
-            _null_s().alias("graph"), _null_s().alias("conv_id"),
-        )
-    )
-    return structure.unionByName(edges).unionByName(labels)
-
-
-def construct_incremental(
-    existing: DataFrame, new_transcripts: DataFrame,
-    gazetteer: dict | None = None, mentions: DataFrame | None = None,
-) -> DataFrame:
-    """Fold a NEW batch of conversations into an existing canonical
-    triple table without reconstructing it — the operation a deployed
-    KG pipeline runs per arriving partition of a 10^12-turn corpus.
-
-    Contract: ``existing`` is a :func:`construct_canonical` output (or
-    this function's own output) and ``new_transcripts`` contains only
-    conv_ids not present in it (append-only batches; amending a
-    conversation is a DELETE + re-insert through the update ops).
-
-    Invariant (asserted by ``tests/test_incremental.py`` on fresh
-    seeds, including a forced re-election):
-
-        ``construct_incremental(construct_canonical(A), B)``
-        is row-identical to ``construct_canonical(A ∪ B)``.
-
-    Why this is sound — three structural facts:
+    Why folding onto a store is sound — three structural facts:
 
     1. *Components never merge.* A gazetteer component is a star
        (``gazetteer.validate_gazetteer``): every present member links
@@ -488,7 +460,8 @@ def construct_incremental(
     splits the existing table on a pushed ``isin(changed-reps)``
     predicate (parquet row-group pruning applies; with the edge table
     bucketed by object this touches only the affected buckets) and
-    broadcast-rewrites the touched fraction.
+    broadcast-rewrites the touched fraction. With no store there is no
+    label slice to read and nothing to re-elect.
     """
     from jena_spark.pipeline.extract import (
         _null_s,
@@ -496,25 +469,30 @@ def construct_incremental(
         turn_structure_triples,
     )
 
-    spark = existing.sparkSession
+    spark = new_transcripts.sparkSession
     # normalize to the canonical construction schema — storage-side
     # columns (bucket, part_id lineage) are re-derived by the writer
     out_cols = list(TM.TERM_COLS) + ["graph", "conv_id"]
-    existing = existing.select(out_cols)
 
     if mentions is None:
+        # Caller may pass an already-persisted mention frame (e.g. the
+        # query registry shares one between this path and raw_triples
+        # so the extraction UDF runs once per corpus).
         mentions = extract_mentions(new_transcripts, gazetteer).persist()
     present_b = sorted(
         r["surface"] for r in mentions.select("surface").distinct().collect()
     )
 
     # fact 2: recover the prior election from the label slice
-    label_rows = (
-        existing.where((F.col("p_val") == TM.RDFS_LABEL)
-                       & (F.col("o_kind") == "literal"))
-        .select("s_val", "o_val").collect()
-    )
-    old_rep = {r["o_val"]: r["s_val"] for r in label_rows}
+    old_rep = {}
+    if existing is not None:
+        existing = existing.select(out_cols)
+        label_rows = (
+            existing.where((F.col("p_val") == TM.RDFS_LABEL)
+                           & (F.col("o_kind") == "literal"))
+            .select("s_val", "o_val").collect()
+        )
+        old_rep = {r["o_val"]: r["s_val"] for r in label_rows}
 
     present = sorted(set(old_rep) | set(present_b))
     rep_rows = present_rep_rows(present, gazetteer)
@@ -546,12 +524,8 @@ def construct_incremental(
     structure = turn_structure_triples(new_transcripts)
     rep_dim = spark.createDataFrame(rep_rows, "surface string, rep string")
     canon_mentions = _dedup_canon_mentions(mentions, rep_dim)
-    turn_bnode = TM.skolem_col(
-        F.col("conv_id"),
-        F.concat(F.lit("turn-"), F.col("turn_idx").cast("string")),
-    )
     edges = canon_mentions.select(
-        F.lit("bnode").alias("s_kind"), turn_bnode.alias("s_val"),
+        F.lit("bnode").alias("s_kind"), TM.turn_bnode_col().alias("s_val"),
         F.lit(TM.P_MENTIONS).alias("p_val"),
         F.lit("iri").alias("o_kind"), F.col("rep").alias("o_val"),
         _null_s().alias("o_datatype"), _null_s().alias("o_lang"),
@@ -559,7 +533,7 @@ def construct_incremental(
     )
     new_surfaces = [(new_rep[s], s) for s in present_b if s not in old_rep]
     labels = spark.createDataFrame(
-        new_surfaces or [], "rep string, surface string"
+        new_surfaces, "rep string, surface string"
     ).select(
         F.lit("iri").alias("s_kind"), F.col("rep").alias("s_val"),
         F.lit(TM.RDFS_LABEL).alias("p_val"),
@@ -567,8 +541,9 @@ def construct_incremental(
         _null_s().alias("o_datatype"), _null_s().alias("o_lang"),
         _null_s().alias("graph"), _null_s().alias("conv_id"),
     )
-    return (
-        kept.unionByName(structure.select(out_cols))
+    batch = (
+        structure.select(out_cols)
         .unionByName(edges.select(out_cols))
         .unionByName(labels.select(out_cols))
     )
+    return batch if kept is None else kept.unionByName(batch)

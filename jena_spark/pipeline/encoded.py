@@ -8,9 +8,11 @@ table (NodeId -> Node) plus triple indexes of fixed-width id-tuples
 decode back (``QueryIteratorIdToNode.java``). This module gives the
 construction pipeline the same shape:
 
-* ``construct_canonical_encoded`` emits the canonical triple set as
-  ``(s_id, p_id, o_id)`` longs (8 B each vs ~80-230 B of term string),
-  plus the node dictionary needed to decode. Ids are the content
+* ``construct_incremental_encoded`` — the one construction path; the one-shot
+  ``construct_canonical_encoded`` is its fold onto no store — emits
+  the canonical triple set as ``(s_id, p_id, o_id)`` longs (8 B each
+  vs ~80-230 B of term string), plus the node dictionary needed to
+  decode. Ids are the content
   hashes of :mod:`jena_spark.pipeline.encode` (``xxhash64`` over the
   term fields) — allocator-free, any executor encodes any row.
 * Decoding ``triples_enc`` through the dictionary with
@@ -36,12 +38,7 @@ from pyspark.sql import functions as F
 
 from jena_spark import terms as TM
 from jena_spark.pipeline.encode import term_id_col
-
-_X = "\x00"  # null sentinel, cf. encode.py
-
-
-def _null_s():
-    return F.lit(None).cast("string")
+from jena_spark.pipeline.extract import _null_s
 
 
 def _nid(kind, val, datatype=None, lang=None):
@@ -66,58 +63,9 @@ def _node_row(kind, val, datatype=None, lang=None):
 def construct_canonical_encoded(
     transcripts: DataFrame, gazetteer: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Canonical triples as id-tuples + node dictionary.
-
-    Returns ``(triples_enc, node_dict)`` where
-
-    * ``triples_enc``: ``(s_id, p_id, o_id, conv_id)`` — one row per
-      canonical triple (same multiset of triples as
-      :func:`jena_spark.pipeline.canonicalize.construct_canonical`,
-      just encoded); ``conv_id`` retained for bucketing/lineage.
-    * ``node_dict``: ``(node_id, kind, val, datatype, lang)`` — one row
-      per distinct term, sufficient to decode every id in
-      ``triples_enc``.
-
-    Shuffle inventory (the whole point): one narrow mention shuffle,
-    one narrow (conv, turn, rep) dedup, one node-dictionary dedup keyed
-    on an 8-byte id with map-side combine. The 6x-wider triple stream
-    itself is narrow end-to-end and ~27 B/row.
-    """
-    from jena_spark.pipeline.canonicalize import present_rep_dim
-    from jena_spark.pipeline.extract import extract_mentions
-
-    spark = transcripts.sparkSession
-    gaz = gazetteer
-
-    structure_enc, structure_nodes = _structure_slices(transcripts)
-
-    # --- canonical mention branch (pre-stringification dedup) ---------------
-    # rep map derived from the surfaces PRESENT in the data (see
-    # present_rep_dim: a full-gazetteer mapping can elect an absent
-    # representative and diverge from the data-derived closure).
-    mentions = extract_mentions(transcripts, gaz).persist()
-    rep_dim = present_rep_dim(mentions, gaz)
-    surfaces = mentions.select("surface").distinct().join(
-        F.broadcast(rep_dim), "surface")
-    edges_enc, labels_enc, entity_nodes = _mention_slices(
-        mentions, rep_dim, surfaces)
-    triples_enc = structure_enc.unionByName(edges_enc).unionByName(labels_enc)
-
-    # --- node dictionary (term strings exist exactly once) ------------------
-    pred_dim = spark.createDataFrame(_PRED_ROWS, "val string")
-    small_nodes = (
-        pred_dim.select(_node_row("iri", F.col("val")).alias("n"))
-        .select("n.node_id", "n.kind", "n.val", "n.datatype", "n.lang")
-        .unionByName(entity_nodes)
-    )
-    node_dict = (
-        structure_nodes.unionByName(small_nodes)
-        # 8-byte key, map-side combine absorbs the per-partition dups
-        # (role/tool/conv repeats) before the shuffle; same-id rows are
-        # identical terms (collision policy: encode.assert_injective).
-        .dropDuplicates(["node_id"])
-    )
-    return triples_enc, node_dict
+    """One-shot encoded build: the fold of ``transcripts`` onto no store
+    (see :func:`construct_incremental_encoded`)."""
+    return construct_incremental_encoded(None, None, transcripts, gazetteer)
 
 
 _PRED_ROWS = [
@@ -126,25 +74,24 @@ _PRED_ROWS = [
 ]
 
 
+def _p(p: str):
+    return _nid("iri", F.lit(p))
+
+
+def _t(s_id, p, o_id):
+    return F.struct(s_id.alias("s_id"), _p(p).alias("p_id"), o_id.alias("o_id"))
+
+
 def _structure_slices(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(structure_enc, structure_nodes) for one transcript batch —
-    narrow explodes, unique by construction. Shared by the one-shot
-    and incremental builders."""
+    narrow explodes, unique by construction."""
     conv_iri = TM.conv_iri_col(F.col("conv_id"))
-    turn_bnode = TM.skolem_col(
-        F.col("conv_id"), F.concat(F.lit("turn-"), F.col("turn_idx").cast("string"))
-    )
+    turn_bnode = TM.turn_bnode_col()
     idx_lex = TM.canon_integer_col(F.col("turn_idx"))
     ts_lex = TM.canon_datetime_col(F.col("ts"))
 
     conv_id_ = _nid("iri", conv_iri)
     turn_id_ = _nid("bnode", turn_bnode)
-
-    def _p(p: str):
-        return _nid("iri", F.lit(p))
-
-    def _t(s_id, p, o_id):
-        return F.struct(s_id.alias("s_id"), _p(p).alias("p_id"), o_id.alias("o_id"))
 
     elems = F.array(
         _t(conv_id_, TM.P_HAS_TURN, turn_id_),
@@ -178,21 +125,14 @@ def _structure_slices(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     return structure_enc, structure_nodes
 
 
-def _p(p: str):
-    return _nid("iri", F.lit(p))
-
-
-def _t(s_id, p, o_id):
-    return F.struct(s_id.alias("s_id"), _p(p).alias("p_id"), o_id.alias("o_id"))
-
-
 def _mention_slices(
     mentions: DataFrame, rep_dim: DataFrame, label_surfaces: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(edges_enc, labels_enc, entity_nodes) — canonical mention edges
     for the batch under ``rep_dim``'s election; label triples and
-    entity-node rows for exactly ``label_surfaces`` (the full present
-    set in the one-shot builder, only the NEW surfaces incrementally)."""
+    entity-node rows for exactly ``label_surfaces`` (the surfaces the
+    store does not hold yet: every present one when there is no
+    store)."""
     # the widest shuffle runs FULLY on encoded ids: the broadcast dim
     # assigns the final o_id (node id of the rep IRI) BEFORE the
     # distinct, so the exchange moves (conv_id, turn_idx, long)
@@ -205,11 +145,8 @@ def _mention_slices(
         .select("conv_id", "turn_idx", "o_id")
         .distinct()
     )
-    m_bnode = TM.skolem_col(
-        F.col("conv_id"), F.concat(F.lit("turn-"), F.col("turn_idx").cast("string"))
-    )
     edges_enc = canon_mentions.select(
-        _nid("bnode", m_bnode).alias("s_id"),
+        _nid("bnode", TM.turn_bnode_col()).alias("s_id"),
         _p(TM.P_MENTIONS).alias("p_id"),
         F.col("o_id"),
         F.col("conv_id"),
@@ -230,23 +167,41 @@ def _mention_slices(
 
 
 def construct_incremental_encoded(
-    triples_enc: DataFrame, node_dict: DataFrame,
+    triples_enc: DataFrame | None, node_dict: DataFrame | None,
     new_transcripts: DataFrame, gazetteer: dict | None = None,
     mentions: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental maintenance of the ENCODED store (the default
-    deployment format): fold a new batch of conversations into
-    ``(triples_enc, node_dict)``. Id-space twin of
-    :func:`jena_spark.pipeline.canonicalize.construct_incremental` —
-    same three structural facts (components never merge; the store is
-    self-describing via its label slice; re-election rewrites are
-    collision-free), so the invariant is the same:
+    """The ENCODED store's only construction path (the default deployment
+    format): fold a new batch of conversations into
+    ``(triples_enc, node_dict)``, or, with both None, build the store
+    from the batch alone (:func:`construct_canonical_encoded`). Id-space
+    twin of :func:`jena_spark.pipeline.canonicalize.construct_incremental`
+    — same emission theorems and the same three structural facts
+    (components never merge; the store is self-describing via its label
+    slice; re-election rewrites are collision-free), so the invariant is
+    the same:
 
         incremental(encoded(A), B) == construct_canonical_encoded(A∪B)
 
     (both tables, asserted in ``tests/test_incremental.py``).
 
-    Id-space specifics:
+    Returns ``(triples_enc, node_dict)`` where
+
+    * ``triples_enc``: ``(s_id, p_id, o_id, conv_id)`` — one row per
+      canonical triple (same multiset of triples as
+      :func:`jena_spark.pipeline.canonicalize.construct_canonical`,
+      just encoded); ``conv_id`` retained for bucketing/lineage.
+    * ``node_dict``: ``(node_id, kind, val, datatype, lang)`` — one row
+      per distinct term, sufficient to decode every id in
+      ``triples_enc``. With no prior store it starts as the
+      predicate nodes.
+
+    Shuffle inventory of the batch: one narrow mention shuffle, one
+    narrow (conv, turn, rep) dedup, one node-dictionary dedup keyed on
+    an 8-byte id with map-side combine. The 6x-wider triple stream
+    itself is narrow end-to-end and ~27 B/row.
+
+    Id-space specifics of folding onto a store:
 
     * The prior election is recovered by decoding ONLY the label slice
       — a pushed 8-byte ``p_id =`` filter, then two joins against the
@@ -263,7 +218,7 @@ def construct_incremental_encoded(
     from jena_spark.pipeline.canonicalize import present_rep_rows
     from jena_spark.pipeline.extract import extract_mentions
 
-    spark = triples_enc.sparkSession
+    spark = new_transcripts.sparkSession
 
     if mentions is None:
         mentions = extract_mentions(new_transcripts, gazetteer).persist()
@@ -271,16 +226,25 @@ def construct_incremental_encoded(
         r["surface"] for r in mentions.select("surface").distinct().collect()
     )
 
-    # recover the prior election from the encoded label slice
-    label_pid = spark.range(1).select(_p(TM.RDFS_LABEL).alias("p")).collect()[0]["p"]
-    lbl = triples_enc.where(F.col("p_id") == label_pid).select("s_id", "o_id")
-    nd_s = node_dict.select(F.col("node_id").alias("s_id"), F.col("val").alias("rep"))
-    nd_o = node_dict.select(F.col("node_id").alias("o_id"), F.col("val").alias("surface"))
-    old_pairs = (
-        lbl.join(nd_s, "s_id").join(nd_o, "o_id")
-        .select("surface", "rep").collect()
-    )
-    old_rep = {r["surface"]: r["rep"] for r in old_pairs}
+    old_rep = {}
+    if triples_enc is None:
+        node_dict = spark.createDataFrame(_PRED_ROWS, "val string").select(
+            _node_row("iri", F.col("val")).alias("n")
+        ).select("n.node_id", "n.kind", "n.val", "n.datatype", "n.lang")
+    else:
+        # recover the prior election from the encoded label slice
+        label_pid = spark.range(1).select(
+            _p(TM.RDFS_LABEL).alias("p")).collect()[0]["p"]
+        lbl = triples_enc.where(F.col("p_id") == label_pid).select("s_id", "o_id")
+        nd_s = node_dict.select(F.col("node_id").alias("s_id"),
+                                F.col("val").alias("rep"))
+        nd_o = node_dict.select(F.col("node_id").alias("o_id"),
+                                F.col("val").alias("surface"))
+        old_pairs = (
+            lbl.join(nd_s, "s_id").join(nd_o, "o_id")
+            .select("surface", "rep").collect()
+        )
+        old_rep = {r["surface"]: r["rep"] for r in old_pairs}
 
     present = sorted(set(old_rep) | set(present_b))
     rep_rows = present_rep_rows(present, gazetteer)
@@ -319,16 +283,16 @@ def construct_incremental_encoded(
     rep_dim = spark.createDataFrame(rep_rows, "surface string, rep string")
     new_surface_rows = [(s, new_rep[s]) for s in present_b if s not in old_rep]
     new_surfaces = spark.createDataFrame(
-        new_surface_rows or [], "surface string, rep string")
+        new_surface_rows, "surface string, rep string")
     edges_enc, labels_enc, entity_nodes = _mention_slices(
         mentions, rep_dim, new_surfaces)
 
-    out_t = (
-        kept_t.unionByName(structure_enc)
-        .unionByName(edges_enc).unionByName(labels_enc)
-    )
+    batch_t = structure_enc.unionByName(edges_enc).unionByName(labels_enc)
+    out_t = batch_t if kept_t is None else kept_t.unionByName(batch_t)
     new_nodes = (
         structure_nodes.unionByName(entity_nodes)
+        # 8-byte key, map-side combine absorbs the per-partition dups
+        # (role/tool/conv repeats) before the shuffle
         .dropDuplicates(["node_id"])
         .join(kept_n, "node_id", "left_anti")
     )

@@ -54,9 +54,7 @@ def turn_structure_triples(transcripts: DataFrame) -> DataFrame:
     Emits (cf. ref_pipeline rule table): conv→hasTurn→turn_bnode and
     turn→{turnIndex,role,text,tool,timestamp}→literal.
     """
-    turn_bnode = TM.skolem_col(
-        F.col("conv_id"), F.concat(F.lit("turn-"), F.col("turn_idx").cast("string"))
-    )
+    turn_bnode = TM.turn_bnode_col()
     conv = TM.conv_iri_col(F.col("conv_id"))
 
     # each element: (s_kind, s_val, p_val, o_kind, o_val, o_datatype, o_lang)
@@ -169,9 +167,7 @@ def mention_triples(
     dim = alias_dim(spark, gazetteer)
     linked = mentions.join(F.broadcast(dim), "surface")
 
-    turn_bnode = TM.skolem_col(
-        F.col("conv_id"), F.concat(F.lit("turn-"), F.col("turn_idx").cast("string"))
-    )
+    turn_bnode = TM.turn_bnode_col()
     s_iri = TM.entity_iri_col(F.col("surface"))
     c_iri = TM.entity_iri_col(F.col("canonical"))
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jena_spark import terms as TM
+from jena_spark.pipeline.extract import _null_s
 
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 RDFS_SUBCLASS = RDFS + "subClassOf"
@@ -60,10 +61,6 @@ def _transitive_close(pairs: set[tuple[str, str]]) -> set[tuple[str, str]]:
             stack.extend(adj.get(n, ()))
         closed.update((src, t) for t in seen)
     return closed
-
-
-def _null_s():
-    return F.lit(None).cast("string")
 
 
 _TBOX_LIMIT = 5_000_000

@@ -224,17 +224,13 @@ class TransactionalStore:
 
     # --- internal -----------------------------------------------------------
     def _read_version_number(self) -> int:
-        from jena_spark.streaming.ingest import CURRENT
+        from jena_spark.streaming.ingest import current_version
 
-        ptr = os.path.join(self.path, CURRENT)
-        if not os.path.exists(ptr):
-            return 0
-        with open(ptr) as f:
-            name = f.read().strip()
+        name = current_version(self.path) or ""
         return int(name[1:]) if name.startswith("v") else 0
 
     def _install(self, quads: DataFrame) -> None:
-        from jena_spark.streaming.ingest import _commit_pointer
+        from jena_spark.streaming.ingest import commit_pointer
 
         with self._lock:
             new_version = self._version + 1
@@ -244,7 +240,7 @@ class TransactionalStore:
                 # old version live — the streaming loop's protocol)
                 vdir = os.path.join(self.path, f"v{new_version}")
                 quads.write.mode("overwrite").parquet(vdir)
-                _commit_pointer(self.path, f"v{new_version}")
+                commit_pointer(self.path, f"v{new_version}")
                 self._current = self.spark.read.parquet(vdir)
             else:
                 # cut lineage per commit: without this, each version's

@@ -80,7 +80,15 @@ def read_table(spark: SparkSession, identifier: str,
             r = r.option("snapshot-id", snapshot_id)
         return r.load(identifier)
     if os.path.exists(os.path.join(identifier, IcebergLiteTable.MANIFEST)):
-        return IcebergLiteTable(spark, identifier).read(snapshot_id)
+        df = IcebergLiteTable(spark, identifier).read(snapshot_id)
+        if df is None:
+            # a crash between the manifest write and the head-pointer
+            # write of the first commit leaves no current snapshot
+            raise ValueError(
+                f"{identifier} has a snapshot manifest but no "
+                f"{IcebergLiteTable.CURRENT} head pointer: no snapshot "
+                "is committed; pass snapshot_id to read a logged one")
+        return df
     if snapshot_id is not None:
         raise ValueError(
             "snapshot_id given but the path is a plain parquet dir "

@@ -105,22 +105,35 @@ def stateful_conv_progress(transcripts_stream: DataFrame) -> DataFrame:
 CURRENT = "_CURRENT"
 
 
-def read_current_snapshot(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The committed canonical snapshot, or None before the first
-    batch. The ``_CURRENT`` pointer file names the live version
-    directory — the poor-man's Iceberg snapshot pointer (atomic via
-    rename), so readers never observe a half-written snapshot."""
+def current_version(store_path: str) -> str | None:
+    """The version directory name the ``_CURRENT`` pointer file names,
+    or None before the first commit. The pointer is the poor-man's
+    Iceberg snapshot pointer (atomic via rename), so readers never
+    observe a half-written snapshot."""
     import os
 
     ptr = os.path.join(store_path, CURRENT)
     if not os.path.exists(ptr):
         return None
     with open(ptr) as f:
-        version = f.read().strip()
+        return f.read().strip()
+
+
+def read_current_snapshot(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """The committed canonical snapshot, or None before the first
+    batch (see :func:`current_version`)."""
+    import os
+
+    version = current_version(store_path)
+    if version is None:
+        return None
     return spark.read.parquet(os.path.join(store_path, version))
 
 
-def _commit_pointer(store_path: str, version: str) -> None:
+def commit_pointer(store_path: str, version: str) -> None:
+    """Make ``version`` live: write the pointer to a temp file and
+    rename it over ``_CURRENT`` (atomic). Call it only after the
+    version directory is fully written."""
     import os
 
     tmp = os.path.join(store_path, CURRENT + ".tmp")
@@ -139,8 +152,8 @@ def start_canonical_maintenance(
     """Continuous KG maintenance: per micro-batch, FOLD the arriving
     conversations into the canonical snapshot with
     :func:`jena_spark.pipeline.canonicalize.construct_incremental`
-    (first batch bootstraps via ``construct_canonical``) and commit a
-    new snapshot version.
+    (the first batch folds onto no snapshot) and commit a new snapshot
+    version.
 
     This is the deployment loop of a continuously-arriving
     10^12-turn corpus: the per-batch cost is the incremental fold
@@ -196,24 +209,17 @@ def apply_canonical_batch(
     """
     import os
 
-    from jena_spark.pipeline.canonicalize import (
-        construct_canonical,
-        construct_incremental,
-    )
+    from jena_spark.pipeline.canonicalize import construct_incremental
 
     if batch_df.isEmpty():
         return False
     version = f"v{epoch_id}"
-    ptr = os.path.join(store_path, CURRENT)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            if f.read().strip() == version:
-                return False  # already applied (replay after commit)
+    if current_version(store_path) == version:
+        return False  # already applied (replay after commit)
     cur = read_current_snapshot(spark, store_path)
-    snap = (construct_canonical(batch_df, gazetteer) if cur is None
-            else construct_incremental(cur, batch_df, gazetteer))
+    snap = construct_incremental(cur, batch_df, gazetteer)
     snap.write.mode("overwrite").parquet(os.path.join(store_path, version))
-    _commit_pointer(store_path, version)
+    commit_pointer(store_path, version)
     return True
 
 
@@ -249,18 +255,15 @@ def apply_dedup_batch(
     if batch_df.isEmpty():
         return False
     version = f"v{epoch_id}"
-    ptr = os.path.join(store_path, CURRENT)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            if f.read().strip() == version:
-                return False
+    if current_version(store_path) == version:
+        return False
     prior = read_current_snapshot(spark, store_path)
     verdicts, state = exact_dedup_incremental(batch_df, prior)
     verdicts.write.mode("overwrite").parquet(
         os.path.join(store_path, "verdicts", version))
     state.write.mode("overwrite").parquet(
         os.path.join(store_path, version))
-    _commit_pointer(store_path, version)
+    commit_pointer(store_path, version)
     return True
 
 

@@ -175,6 +175,14 @@ def skolem_col(scope: Column, label: Column) -> Column:
     return F.concat(F.lit("_:"), F.md5(F.concat_ws(":", scope, label)))
 
 
+def turn_bnode_col() -> Column:
+    """The turn blank node of a row keyed by ``(conv_id, turn_idx)``:
+    the skolem of ``"turn-<idx>"`` scoped to the conversation."""
+    return skolem_col(
+        F.col("conv_id"), F.concat(F.lit("turn-"), F.col("turn_idx").cast("string"))
+    )
+
+
 def entity_iri_col(name: Column) -> Column:
     slug = F.regexp_replace(F.lower(name), "[^a-z0-9]+", "_")
     slug = F.regexp_replace(slug, "(^_+|_+$)", "")

@@ -130,3 +130,14 @@ def test_commit_onto_plain_parquet_refused(spark, tmp_path):
         with pytest.raises(ValueError, match="plain parquet"):
             commit()
     assert sorted(r["k"] for r in read_table(spark, p).collect()) == list(range(7))
+
+
+def test_read_table_without_head_pointer_raises(spark, tmp_path):
+    """A crash between the manifest write and the head-pointer write of
+    the first commit leaves a manifest and no ``_CURRENT``: read_table
+    must raise naming the path, not hand back None as a DataFrame."""
+    p = str(tmp_path / "headless")
+    append_table(_df(spark, [(1, "a")]), p)
+    os.remove(os.path.join(p, IcebergLiteTable.CURRENT))
+    with pytest.raises(ValueError, match="headless"):
+        read_table(spark, p)

@@ -200,3 +200,43 @@ def test_incremental_encoded_chain(spark):
     want_t, want_n = construct_canonical_encoded(full)
     assert _rows(acc_t) == _rows(want_t)
     assert _rows(acc_n) == _rows(want_n)
+
+
+def test_mentionless_batch_both_directions(spark):
+    """A batch whose texts mention no gazetteer surface (empty
+    present-surface set, empty rep dim), in both store formats: its one-shot
+    build equals the generic reference, and folding it onto a batch
+    with mentions, or a batch with mentions onto it, equals the one-shot
+    build of the union."""
+    from jena_spark.pipeline.canonicalize import canonicalize_triples
+    from jena_spark.pipeline.encode import decode_triples
+    from jena_spark.pipeline.encoded import (
+        construct_canonical_encoded,
+        construct_incremental_encoded,
+    )
+    from jena_spark.pipeline.extract import raw_triples
+
+    quiet = [("conv-q", 0, "nothing to see here"),
+             ("conv-q", 1, "still no names at all")]
+    loud = [("conv-m", 0, "Turing wrote the paper"),
+            ("conv-m", 1, "Spark is fast")]
+    terms = lambda df: _rows(df.select(*TM.TERM_COLS))  # noqa: E731
+
+    only = construct_canonical(_mini(spark, quiet))
+    assert terms(only) == terms(canonicalize_triples(raw_triples(_mini(spark, quiet))))
+    assert only.where(f"p_val = '{TM.P_MENTIONS}'").count() == 0
+    t_q, n_q = construct_canonical_encoded(_mini(spark, quiet))
+    assert terms(decode_triples(t_q.drop("conv_id"), n_q)) == terms(only)
+
+    union = _mini(spark, quiet + loud)
+    want = _rows(construct_canonical(union))
+    want_t, want_n = _enc_rows(construct_canonical_encoded(union))
+    for first, then in ((quiet, loud), (loud, quiet)):
+        inc = construct_incremental(
+            construct_canonical(_mini(spark, first)), _mini(spark, then))
+        assert _rows(inc) == want
+        t_a, n_a = construct_canonical_encoded(_mini(spark, first))
+        inc_t, inc_n = _enc_rows(
+            construct_incremental_encoded(t_a, n_a, _mini(spark, then)))
+        assert inc_t == want_t
+        assert inc_n == want_n
